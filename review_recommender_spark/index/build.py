@@ -52,6 +52,7 @@ manifest (index/tableio.py).
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 import zlib
@@ -81,6 +82,14 @@ POSTINGS = "postings"
 BLOCK_SCHEMA = ("term string, range_id long, block_id int, n int, "
                 "first_doc_id long, last_doc_id long, max_tf int, min_dl int, "
                 "doc_bytes binary, tf_bytes binary, dl_bytes binary")
+# Declared read schemas of the two tables every query scans, equal to what
+# Spark would infer (the partition column last, as partition discovery
+# places it): inference costs a Spark job per read, and a column missing
+# here would read as nulls without error (tests/test_plans.py guards the
+# equality on a fresh build and after a delta merge).
+POSTINGS_SCHEMA = BLOCK_SCHEMA + ", term_bucket int"
+TERM_STATS_SCHEMA = ("term string, df long, idf_raw double, idf double, "
+                     "term_bucket int")
 
 
 def term_bucket_py(term: str, n_buckets: int) -> int:
@@ -497,12 +506,12 @@ class InvertedIndex:
     def postings(self, spark: SparkSession) -> DataFrame:
         if self._cached and POSTINGS in self._cached:
             return self._cached[POSTINGS]
-        return self.io.read(spark, POSTINGS)
+        return self.io.read(spark, POSTINGS, schema=POSTINGS_SCHEMA)
 
     def term_stats(self, spark: SparkSession) -> DataFrame:
         if self._cached and TERM_STATS in self._cached:
             return self._cached[TERM_STATS]
-        return self.io.read(spark, TERM_STATS)
+        return self.io.read(spark, TERM_STATS, schema=TERM_STATS_SCHEMA)
 
     def warm(self, spark: SparkSession, serving_shards: int | None = None,
              idf_cache_max: int = 2_000_000,
@@ -580,7 +589,7 @@ class InvertedIndex:
         if max_bytes is not None:
             if max_bytes < 0:
                 raise ValueError("warm(): max_bytes must be >= 0")
-            sizes = (self.io.read(spark, POSTINGS)
+            sizes = (self.io.read(spark, POSTINGS, schema=POSTINGS_SCHEMA)
                      .groupBy("range_id")
                      .agg(F.sum(F.octet_length("doc_bytes")
                                 + F.octet_length("tf_bytes")
@@ -598,9 +607,10 @@ class InvertedIndex:
             for df in self._cached.values():
                 if hasattr(df, "unpersist"):
                     df.unpersist()
-        term_stats = self.io.read(spark, TERM_STATS).cache()
+        term_stats = self.io.read(spark, TERM_STATS,
+                                  schema=TERM_STATS_SCHEMA).cache()
         cached: dict = {TERM_STATS: term_stats}
-        posts_src = self.io.read(spark, POSTINGS)
+        posts_src = self.io.read(spark, POSTINGS, schema=POSTINGS_SCHEMA)
         if ranges is not None:
             warm_ranges = frozenset(int(r) for r in ranges)
             cached["_warm_ranges"] = warm_ranges
@@ -672,6 +682,31 @@ class InvertedIndex:
 
     def doc_stats(self, spark: SparkSession) -> DataFrame:
         return self.io.read(spark, DOC_STATS)
+
+    @functools.cached_property
+    def range_count_bound(self) -> int:
+        """Upper bound on the number of distinct doc ranges (range_id
+        values) in the index, read once from the doc_stats parquet footers
+        (min/max doc_id; metadata only, no Spark job). Doc ids need not be
+        dense, so n_docs >> range_shift is no bound; n_docs is one (every
+        range holds a doc) and is the answer when a footer lacks
+        statistics."""
+        import pyarrow.dataset as pa_ds
+        lo = hi = None
+        for frag in pa_ds.dataset(self.io.path(DOC_STATS),
+                                  format="parquet").get_fragments():
+            md = frag.metadata
+            col = md.schema.names.index("doc_id")
+            for i in range(md.num_row_groups):
+                st = md.row_group(i).column(col).statistics
+                if st is None or not st.has_min_max:
+                    return self.n_docs
+                lo = st.min if lo is None else min(lo, st.min)
+                hi = st.max if hi is None else max(hi, st.max)
+        if lo is None:
+            return 0
+        shift = self.cfg.index.range_shift
+        return min(self.n_docs, (hi >> shift) - (lo >> shift) + 1)
 
     @classmethod
     def load(cls, spark: SparkSession, io: TableIO,

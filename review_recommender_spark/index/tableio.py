@@ -109,8 +109,13 @@ class TableIO:
         with open(p) as f:
             return json.load(f)
 
-    def read(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.parquet(self.path(name))
+    def read(self, spark: SparkSession, name: str,
+             schema: str | None = None) -> DataFrame:
+        """``schema`` (DDL): read with a declared schema instead of
+        inferring it from the parquet footers, which costs a Spark job
+        per read."""
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self.path(name))
 
     def exists(self, name: str) -> bool:
         return os.path.exists(self.path(name))

@@ -173,3 +173,131 @@ def test_local_tf_doc_stats_read_is_column_pruned(spark, small_pages,
     assert m, plan
     assert "doc_id" in m.group(1) and "dl" in m.group(1), plan
     assert "toks" not in m.group(1), plan
+
+
+# ---- declared read schemas, the df-derived block bound, job budgets ----
+
+def _cold(index):
+    """A view of ``index`` without its warm caches: reads go to disk."""
+    import dataclasses
+    return dataclasses.replace(index, _cached=None)
+
+
+@pytest.fixture(scope="module")
+def delta_pair(spark, tmp_path_factory):
+    """A main index and its delta merge over doc ids that are neither
+    dense nor aligned to ranges: the delta interleaves with main's
+    ranges and adds far-away ids, and some main docs are deleted, so the
+    merge re-cuts the touched (term, range) groups."""
+    import dataclasses
+
+    import numpy as np
+    from review_recommender_spark.config import EngineConfig, bm25_north
+    from review_recommender_spark.corpus.pages import PAGES_SCHEMA, pages_pdf
+    from review_recommender_spark.index.build import (build_index,
+                                                      delta_merge_index)
+    from review_recommender_spark.index.tableio import TableIO
+
+    cfg = EngineConfig(bm25=bm25_north())
+    cfg = dataclasses.replace(
+        cfg, index=dataclasses.replace(cfg.index, range_shift=6,
+                                       term_buckets=8))
+    root = tmp_path_factory.mktemp("delta_pair")
+    ids = np.arange(40, 640)
+    main_ids = ids[ids % 5 != 0]
+    delta_ids = np.concatenate([ids[ids % 5 == 0], np.arange(10_000, 10_100)])
+    main = build_index(spark, spark.createDataFrame(pages_pdf(main_ids),
+                                                    schema=PAGES_SCHEMA),
+                       TableIO(str(root / "main")), cfg)
+    merged = delta_merge_index(
+        spark, main, spark.createDataFrame(pages_pdf(delta_ids),
+                                           schema=PAGES_SCHEMA),
+        TableIO(str(root / "merged")),
+        delete_doc_ids=[int(x) for x in main_ids[::7]])
+    return main, merged
+
+
+def test_declared_schemas_match_inferred(spark, small_index, delta_pair):
+    """The postings and term_stats reads declare their schemas (no
+    inference job). A declared schema that lacks a column reads it as
+    nulls without error, so it must equal what Spark infers, on a fresh
+    build and after a delta merge."""
+    for index in (small_index, *delta_pair):
+        cold = _cold(index)
+        for name, df in (("postings", cold.postings(spark)),
+                         ("term_stats", cold.term_stats(spark))):
+            inferred = spark.read.parquet(index.io.path(name)).schema
+            assert df.schema == inferred, (name, df.schema, inferred)
+
+
+def test_candidate_block_bound_covers_every_term(spark, small_index,
+                                                 delta_pair):
+    """The pruned path gathers blocks to the driver on the strength of the
+    df-derived bound, so it must reach every term's real block-row count,
+    on a fresh build and after a delta merge; and the range-count bound
+    it rests on must reach the real number of ranges."""
+    from review_recommender_spark.query.bm25 import _candidate_blocks_bound
+
+    for index in (small_index, *delta_pair):
+        cold = _cold(index)
+        posts = cold.postings(spark)
+        n_ranges = index.range_count_bound
+        assert n_ranges >= posts.select("range_id").distinct().count()
+        rows = (posts.groupBy("term").agg(F.count("*").alias("blocks"))
+                .join(cold.term_stats(spark).select("term", "df"), "term")
+                .collect())
+        assert len(rows) == index.vocab_size
+        short = [(r["term"], r["df"], r["blocks"]) for r in rows
+                 if _candidate_blocks_bound(
+                     [r["df"]], index.cfg.index.block_size, n_ranges)
+                 < r["blocks"]]
+        assert not short, short[:5]
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, counted through a job group."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cold_gathered_pruned_query_job_budget(spark, small_index):
+    """A cold pruned query in the GATHERED tier: one term_stats lookup
+    (idf and df) plus one fetch of the encoded candidate blocks."""
+    from review_recommender_spark.query.bm25 import bm25_topk_pruned
+
+    cold = _cold(small_index)
+    stats: dict = {}
+    n = _jobs(spark, lambda: bm25_topk_pruned(
+        spark, cold, "wireless sound quality", k=10,
+        min_ranges_to_prune=1, stats=stats).collect())
+    assert stats["tier"] == "gathered"
+    assert n == 2
+
+
+def test_cold_idf_lookup_job_budget(spark, small_index):
+    from review_recommender_spark.query.bm25 import query_term_idf
+
+    assert _jobs(spark, lambda: query_term_idf(
+        spark, _cold(small_index), "wireless sound quality")) == 1
+
+
+def test_driver_built_result_collects_without_jobs(spark):
+    """Driver-merged top-k rows become a local relation: collecting them
+    launches no job, in the engine's order, with scores bit for bit."""
+    from review_recommender_spark.query.bm25 import _topk_result
+
+    pairs = [(7, 0.1 + 0.2), (3, 2.5), (9, 0.1 + 0.2), (1, -1.0)]
+    out: list = []
+    assert _jobs(spark, lambda: out.extend(
+        _topk_result(spark, pairs, 3).collect())) == 0
+    assert [(r["doc_id"], r["score"]) for r in out] \
+        == [(3, 2.5), (7, 0.1 + 0.2), (9, 0.1 + 0.2)]

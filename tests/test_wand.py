@@ -489,3 +489,50 @@ def test_pruned_exact_ties_at_theta(spark, tmp_path):
     assert [r["doc_id"] for r in pruned] == [r["doc_id"] for r in exact]
     np.testing.assert_allclose([r["score"] for r in pruned],
                                [r["score"] for r in exact], rtol=1e-12)
+
+
+def _pairs(df):
+    return [(r["doc_id"], r["score"]) for r in df.collect()]
+
+
+@pytest.mark.parametrize("constraint",
+                         [None, "filter", "exclude", "min_match", "after"])
+@pytest.mark.parametrize("tier", ["distributed", "lazy"])
+def test_pruned_tiers_bitwise_equal_exact(spark, small_index, monkeypatch,
+                                          tier, constraint):
+    """The DISTRIBUTED and LAZY pruned tiers are reached only past driver
+    caps no test corpus nears, so the caps are zeroed here. Each tier must
+    return the exact path's rows bit for bit, alone and under each
+    before-top-k constraint."""
+    from pyspark.sql import functions as F
+
+    from review_recommender_spark.query import bm25
+
+    monkeypatch.setattr(bm25, "_PRUNED_LOCAL_BLOCKS_MAX", 0)
+    if tier == "lazy":
+        monkeypatch.setattr(bm25, "_PRUNED_DRIVER_RANGES_MAX", 0)
+    ids = small_index.doc_stats(spark).select("doc_id")
+    tiers = set()
+    for query in QUERIES:
+        kw: dict = {}
+        if constraint == "filter":
+            kw["filter_docs"] = ids.filter(F.col("doc_id") % 3 == 0)
+        elif constraint == "exclude":
+            kw["exclude_docs"] = ids.filter(F.col("doc_id") % 4 == 0)
+        elif constraint == "min_match":
+            kw["min_match"] = "all"
+        elif constraint == "after":
+            page = _pairs(bm25_topk_exact(spark, small_index, query, k=3))
+            if page:
+                kw["after"] = page[-1][::-1]
+        stats: dict = {}
+        pruned = _pairs(bm25_topk_pruned(spark, small_index, query, k=10,
+                                         seed_ranges=2,
+                                         min_ranges_to_prune=1,
+                                         stats=stats, **kw))
+        exact = _pairs(bm25_topk_exact(spark, small_index, query, k=10,
+                                       **kw))
+        assert pruned == exact, (query, kw)
+        if "tier" in stats:    # queries with no known term stop earlier
+            tiers.add(stats["tier"])
+    assert tiers == {tier}
