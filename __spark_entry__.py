@@ -277,10 +277,11 @@ def q_ft_bm25_topk_conjunctive(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
     """Minimum-should-match retrieval (exact path): true BM25 top-k of
     the docs matching ≥ 3 distinct query terms — the constraint is a
-    map-size filter inside the query-order fold
-    (query/bm25.py::_fold_scores min_match=), applied BEFORE top-k so an
-    under-matched doc never occupies a slot. Scores bitwise-unchanged;
-    the DuckDB twin is a HAVING over the distinct matched-term count."""
+    distinct-matched-term count inside the scoring kernel
+    (query/bm25.py::_served_local_topk min_matches=), applied BEFORE
+    top-k so an under-matched doc never occupies a slot. Scores
+    bitwise-unchanged; the DuckDB twin is a HAVING over the distinct
+    matched-term count."""
     idx = _doc_index(spark, sf_dir)
     res = bm25_topk_exact(spark, idx, BM25_QUERY, k=BM25_K,
                           min_match=CONJ_MIN_MATCH)
@@ -309,7 +310,7 @@ def q_ft_bm25_topk_conjunctive_served(spark: SparkSession,
 def q_ft_bm25_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTERED retrieval (exact path): true BM25 top-k of the lang='en'
     slice of the corpus — the predicate is applied BEFORE top-k via a
-    LEFT SEMI join of score partials against the pushed-down metadata
+    LEFT SEMI join of per-doc scores against the pushed-down metadata
     scan (query/bm25.py::_apply_doc_filter)."""
     idx = _doc_index(spark, sf_dir)
     fd = _load(spark, sf_dir, "documents") \
@@ -345,7 +346,7 @@ def q_ft_bm25_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``bm25_topk_served_batch``). Scores are bitwise-equal to the exact
     path (tests/test_wand.py), so the same DuckDB BM25 recomputation
     gates this plan — zero shuffle, driver-cached idf — not just the
-    cold join plan that ``ft_bm25_topk`` runs."""
+    cold exact plan that ``ft_bm25_topk`` runs."""
     from review_recommender_spark.query.bm25 import bm25_topk_served_batch
     idx = _doc_index(spark, sf_dir)
     if not idx.is_warm():

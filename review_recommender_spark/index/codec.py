@@ -143,3 +143,18 @@ def decode_block(doc_bytes: bytes, tf_bytes: bytes, dl_bytes: bytes,
     tfs = varint_decode(tf_bytes, n).astype(np.int64)
     dls = varint_decode(dl_bytes, n).astype(np.int64)
     return doc_ids, tfs, dls
+
+
+def decode_doc_ids_bulk(ns: np.ndarray, doc_bytes) -> np.ndarray:
+    """Doc ids (int64) of MANY blocks in one varint pass: ``doc_bytes`` is
+    the blocks' encoded doc-id buffers in order, ``ns`` their posting
+    counts (each ≥ 1). Each block's first delta is its absolute doc id, so
+    one cumsum over the whole batch is reset per block by subtracting the
+    running total at the previous block's end. Equal, block by block, to
+    the doc ids of ``decode_block``."""
+    ns = np.asarray(ns, dtype=np.int64)
+    c = np.cumsum(varint_decode(b"".join(doc_bytes),
+                                int(ns.sum())).astype(np.int64))
+    base = np.zeros(len(ns), dtype=np.int64)
+    base[1:] = c[np.cumsum(ns)[:-1] - 1]
+    return c - np.repeat(base, ns)

@@ -52,7 +52,8 @@ from pyspark.sql import functions as F
 from ..config import EngineConfig
 from ..functions.tokenize import tokenize_k1_py
 from .build import LOCAL_TF, InvertedIndex, term_bucket_col, term_bucket_py
-from .codec import varint_decode, varint_encode, varint_nbytes
+from .codec import (decode_doc_ids_bulk, varint_decode, varint_encode,
+                    varint_nbytes)
 from .tableio import TableIO
 
 POSITIONS = "positions"
@@ -124,9 +125,17 @@ def decode_pos_block(doc_bytes: bytes, cnt_bytes: bytes, pos_bytes: bytes,
     flat — each doc's positions ascending)."""
     docs = np.cumsum(varint_decode(doc_bytes, n).astype(np.int64))
     counts = varint_decode(cnt_bytes, n).astype(np.int64)
+    return docs, counts, _decode_positions(counts, pos_bytes)
+
+
+def _decode_positions(counts: np.ndarray, pos_bytes: bytes) -> np.ndarray:
+    """Flat positions (int64) of docs holding ``counts`` positions each,
+    from their concatenated delta-varint buffer: one varint pass, then a
+    cumsum reset at each doc's first position (every doc's first delta
+    is its absolute position)."""
     pdeltas = varint_decode(pos_bytes, int(counts.sum())).astype(np.int64)
     if not len(pdeltas):
-        return docs, counts, pdeltas
+        return pdeltas
     starts = np.zeros(len(counts), dtype=np.int64)
     np.cumsum(counts[:-1], out=starts[1:])
     starts = starts[counts > 0]
@@ -135,7 +144,7 @@ def decode_pos_block(doc_bytes: bytes, cnt_bytes: bytes, pos_bytes: bytes,
     base = np.zeros(len(pdeltas), dtype=np.int64)
     base[starts] = c[starts] - pdeltas[starts]
     np.maximum.accumulate(base, out=base)
-    return docs, counts, c - base
+    return c - base
 
 
 def _pos_blocks_to_partials(purge_ids=None):
@@ -162,28 +171,11 @@ def _pos_blocks_to_partials(purge_ids=None):
         if not len(pdf):
             return None
         ns = pdf["n"].to_numpy(dtype=np.int64)           # docs per block
-        total = int(ns.sum())
-        deltas = varint_decode(
-            b"".join(pdf["doc_bytes"]), total).astype(np.int64)
-        bstarts0 = np.concatenate([[0], np.cumsum(ns)[:-1]])
-        c = np.cumsum(deltas)
-        base = np.zeros(len(ns), dtype=np.int64)
-        base[1:] = c[bstarts0[1:] - 1]
-        docs = c - np.repeat(base, ns)
+        docs = decode_doc_ids_bulk(ns, pdf["doc_bytes"])
         counts = varint_decode(
-            b"".join(pdf["cnt_bytes"]), total).astype(np.int64)
-        totpos = int(counts.sum())
-        pdeltas = varint_decode(
-            b"".join(pdf["pos_bytes"]), totpos).astype(np.int64)
-        # positions: grouped cumsum resetting at each DOC start
-        dstarts = np.zeros(total, dtype=np.int64)
-        np.cumsum(counts[:-1], out=dstarts[1:])
-        pc = np.cumsum(pdeltas)
-        pbase = np.zeros(totpos, dtype=np.int64)
-        s = dstarts[counts > 0]
-        pbase[s] = pc[s] - pdeltas[s]
-        np.maximum.accumulate(pbase, out=pbase)
-        pos = (pc - pbase).astype(np.int32)
+            b"".join(pdf["cnt_bytes"]), int(ns.sum())).astype(np.int64)
+        pos = _decode_positions(
+            counts, b"".join(pdf["pos_bytes"])).astype(np.int32)
         if purge is not None and len(purge):
             keep_doc = ~np.isin(docs, purge)
             pos = pos[np.repeat(keep_doc, counts)]
@@ -215,74 +207,13 @@ def _pos_blocks_to_partials(purge_ids=None):
 
 # --------------------------------------------------------------- build
 
-def _pack_pos_partials(chunk_rows: int = 2_000_000):
-    """Map-side combine: (doc_id, range_id, pos, term) occurrence rows →
-    one partial per (term, range_id) with packed ragged arrays
-    (doc_arr int64 per doc, cnt_arr int32 per doc, pos_arr int32 flat).
-    A doc split across chunk flushes yields two partials for the same
-    (group, doc); the merge kernel re-sorts and re-concatenates."""
-
-    def pack(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-
-        def flush(frames: list[pd.DataFrame]) -> pd.DataFrame:
-            pdf = (pd.concat(frames, ignore_index=True)
-                   if len(frames) > 1 else frames[0])
-            codes, uniq = pd.factorize(pdf["term"].to_numpy())
-            r = pdf["range_id"].to_numpy()
-            d = pdf["doc_id"].to_numpy()
-            p = pdf["pos"].to_numpy(dtype=np.int32)
-            order = np.lexsort((p, d, r, codes))
-            codes, r, d, p = codes[order], r[order], d[order], p[order]
-            m = len(d)
-            dchange = np.empty(m, dtype=bool)
-            dchange[0] = True
-            dchange[1:] = ((codes[1:] != codes[:-1]) | (r[1:] != r[:-1])
-                           | (d[1:] != d[:-1]))
-            druns = np.flatnonzero(dchange)
-            doc_ids = d[druns]
-            counts = np.diff(np.append(druns, m)).astype(np.int32)
-            gcodes, granges = codes[druns], r[druns]
-            gchange = np.empty(len(druns), dtype=bool)
-            gchange[0] = True
-            gchange[1:] = ((gcodes[1:] != gcodes[:-1])
-                           | (granges[1:] != granges[:-1]))
-            gs = np.flatnonzero(gchange)
-            ge = np.append(gs[1:], len(druns))
-            flat = np.zeros(len(druns) + 1, dtype=np.int64)
-            np.cumsum(counts, out=flat[1:])
-            return pd.DataFrame({
-                "term": uniq[gcodes[gs]],
-                "range_id": granges[gs],
-                "n": (ge - gs).astype(np.int32),
-                "doc_arr": [doc_ids[a:b].tobytes() for a, b in zip(gs, ge)],
-                "cnt_arr": [counts[a:b].tobytes() for a, b in zip(gs, ge)],
-                "pos_arr": [p[flat[a]:flat[b]].tobytes()
-                            for a, b in zip(gs, ge)],
-            })
-
-        buf: list[pd.DataFrame] = []
-        nbuf = 0
-        for pdf in it:
-            if not len(pdf):
-                continue
-            buf.append(pdf)
-            nbuf += len(pdf)
-            if nbuf >= chunk_rows:
-                yield flush(buf)
-                buf, nbuf = [], 0
-        if buf:
-            yield flush(buf)
-
-    return pack
-
-
 def _pack_pos_partials_arrow(shift: int, chunk_tokens: int = 2_000_000):
     """Map-side combine reading the PACKED checkpoint rows directly
-    (``mapInArrow`` over (doc_id, toks)) — r7 form of
-    ``_pack_pos_partials``, mirroring ``build._pack_partials_arrow``:
-    no JVM posexplode, no occurrence-row Arrow transfer; positions are
-    each token's offset inside its doc's kept-token list (the same
-    coordinate posexplode produced). Partial content is identical, so
+    (``mapInArrow`` over (doc_id, toks)), mirroring
+    ``build._pack_partials_arrow``: no JVM posexplode, no occurrence-row
+    Arrow transfer; positions are each token's offset inside its doc's
+    kept-token list (the same coordinate posexplode produced). Partial
+    content is identical, so
     the merged positional blocks stay byte-identical
     (tests/test_positions.py gates vs the delta-merge rebuild)."""
 
@@ -476,9 +407,8 @@ def build_positions(spark: SparkSession, io: TableIO,
         shuffle_partitions = int(
             spark.conf.get("spark.sql.shuffle.partitions"))
     local_tf = io.read(spark, LOCAL_TF)
-    # r7: pack directly from the packed checkpoint rows — no JVM
-    # posexplode, no occurrence-row Arrow transfer (_pack_pos_partials
-    # remains for occurrence-row inputs, e.g. tests)
+    # pack directly from the packed checkpoint rows — no JVM
+    # posexplode, no occurrence-row Arrow transfer
     partials = (local_tf.select("doc_id", "toks")
                 .mapInArrow(
                     _pack_pos_partials_arrow(cfg.index.range_shift),
@@ -514,28 +444,10 @@ def _decode_pos_rows_bulk(it):
     pdf = frames[0] if len(frames) == 1 \
         else pd.concat(frames, ignore_index=True)
     ns = pdf["n"].to_numpy(dtype=np.int64)            # docs per block
-    total = int(ns.sum())
-    deltas = varint_decode(b"".join(pdf["doc_bytes"]),
-                           total).astype(np.int64)
-    bstarts = np.concatenate([[0], np.cumsum(ns)[:-1]])
-    c = np.cumsum(deltas)
-    base = np.zeros(len(ns), dtype=np.int64)
-    base[1:] = c[bstarts[1:] - 1]
-    docs = c - np.repeat(base, ns)
+    docs = decode_doc_ids_bulk(ns, pdf["doc_bytes"])
     counts = varint_decode(b"".join(pdf["cnt_bytes"]),
-                           total).astype(np.int64)
-    totpos = int(counts.sum())
-    pdeltas = varint_decode(b"".join(pdf["pos_bytes"]),
-                           totpos).astype(np.int64)
-    # positions: grouped cumsum resetting at each DOC start
-    dstarts = np.zeros(total, dtype=np.int64)
-    np.cumsum(counts[:-1], out=dstarts[1:])
-    pc = np.cumsum(pdeltas)
-    pbase = np.zeros(totpos, dtype=np.int64)
-    s = dstarts[counts > 0]
-    pbase[s] = pc[s] - pdeltas[s]
-    np.maximum.accumulate(pbase, out=pbase)
-    pos = pc - pbase
+                           int(ns.sum())).astype(np.int64)
+    pos = _decode_positions(counts, b"".join(pdf["pos_bytes"]))
     keys = np.repeat(docs, counts) * _POS_MULT + pos
     codes, uniq_terms = pd.factorize(pdf["term"].to_numpy())
     code_per_pos = np.repeat(

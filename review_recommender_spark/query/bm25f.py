@@ -46,7 +46,8 @@ from ..index.build import (LOCAL_TF, InvertedIndex, term_bucket_col,
                            term_bucket_py)
 from ..index.codec import decode_block
 from ..index.tableio import TableIO
-from .bm25 import RESULT_SCHEMA, _fold_scores, _qtf, _query_blocks
+from .bm25 import (RESULT_SCHEMA, _fold_scores, _qtf, _query_blocks, _scores,
+                   query_term_idf)
 
 BM25F_STATS = "bm25f_stats"
 
@@ -203,29 +204,28 @@ def dismax_topk(spark: SparkSession, fields: list[Bm25fField],
     single field — gated); ``1`` degrades to the naive sum. Field
     ``weight`` multiplies that field's score before the max.
 
-    Plan shape: one bucket+term-pruned scan + fold per field (the exact
-    plan ×|fields|), one (doc)-keyed combine via a literal fid→score
-    map (greatest/sum in declared field order — deterministic float
+    Plan shape: the exact path's all-scores kernel pass per field
+    (×|fields|), one (doc)-keyed combine via a literal fid→score map
+    (greatest/sum in declared field order — deterministic float
     expressions), one top-k. No driver loops."""
     if not fields:
         raise ValueError("dismax_topk needs at least one field")
     if not 0.0 <= tie_breaker <= 1.0:
         raise ValueError("tie_breaker must be in [0, 1]")
-    from .bm25 import _score_blocks_closure, query_term_idf
     token_seq = tokenize_k2_py(query)
-    if not token_seq:
-        return spark.createDataFrame([], RESULT_SCHEMA)
     per_field = None
     for fid, fld in enumerate(fields):
         idf = query_term_idf(spark, fld.index, query)
-        blocks = _query_blocks(spark, fld.index, sorted(idf))
-        partials = _score_blocks_closure(blocks, fld.index, idf)
-        scored = _fold_scores(partials, token_seq, ["doc_id"]) \
+        if not idf:
+            continue
+        scored = _scores(spark, fld.index, [token_seq], idf) \
             .select("doc_id",
                     F.lit(fid).alias("fid"),
                     (F.col("score") * float(fld.weight)).alias("fs"))
         per_field = scored if per_field is None \
             else per_field.unionByName(scored)
+    if per_field is None:
+        return spark.createDataFrame([], RESULT_SCHEMA)
     g = per_field.groupBy("doc_id").agg(
         F.map_from_entries(F.collect_list(F.struct("fid", "fs")))
         .alias("__sm"))

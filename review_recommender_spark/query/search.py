@@ -8,11 +8,12 @@ Distributed shape (SURVEY.md §3.1 mapped to Spark):
      (per-partition top-k then merge — the distributed analogue of
      np.argpartition, O(pool) shuffle instead of O(N)).
   2. BM25 — corpus-global scores from the posting index for all queries in
-     one pass: (query, term, weight) rows broadcast-joined to the pruned
-     posting blocks, decoded once per block, partials summed by
-     (query, doc). A BM25 score depends only on the doc itself, so scoring
-     just the union of pools is value-identical to the reference's
-     full-corpus get_scores + subset (quirk Q2).
+     one pass of the engine's BM25 kernel (``bm25_scores_batch``): each
+     block decoded once, each (query, doc) score complete inside one
+     doc-range partition. A BM25 score depends only on the doc itself, so
+     scoring the matching docs and joining the dense pool is
+     value-identical to the reference's full-corpus get_scores + subset
+     (quirk Q2).
   3. second pass — pool rows grouped by query and scored by the
      `secondpass.score_pool` kernel inside ``applyInPandas`` (the north
      rule's "second-pass pandas UDF over the BM25 candidate pool").
@@ -31,9 +32,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
+from ..functions.tokenize import tokenize_k2_py
 from ..index.build import InvertedIndex
-from .bm25 import (_query_blocks, _score_blocks_closure_batch,
-                   _term_stats_pruned)
+from .bm25 import _scores, query_term_idf
 from .encoder import cross_encoder_score, encode_text
 from .secondpass import score_pool
 
@@ -207,148 +208,28 @@ def bestrev_scores_batch(spark: SparkSession, reviews_emb: DataFrame,
 
 def bm25_scores_batch(spark: SparkSession, index: InvertedIndex,
                       queries: list[str]) -> DataFrame:
-    """(query_id, doc_id, _bm25_raw) for every doc matching ≥1 query term —
-    a single plan over the pruned posting blocks, per-(query, term)
-    weights closure-captured in the decode kernel (r7: the former
-    weights broadcast join cost ~1.4 s of BroadcastExchange per call;
-    warm indexes resolve idf from the driver cache with zero jobs, cold
-    ones with one bucket-pruned lookup)."""
-    from ..functions.tokenize import tokenize_k2_py
-    terms = sorted({t for q in queries for t in set(tokenize_k2_py(q))})
-    if not terms:
-        return spark.createDataFrame(
-            [], "query_id int, doc_id long, _bm25_raw double")
-    idf_map = index.idf_lookup()
-    if idf_map is None:
-        idf_map = {r["term"]: r["idf"]
-                   for r in _term_stats_pruned(spark, index, terms)
-                   .select("term", "idf").collect()}
-    qweights = [{t: idf_map[t] for t in set(tokenize_k2_py(q))
-                 if t in idf_map} for q in queries]
-    known = sorted({t for w in qweights for t in w})
-    if not known:
-        return spark.createDataFrame(
-            [], "query_id int, doc_id long, _bm25_raw double")
-    blocks = _query_blocks(spark, index, known)
-    partials = _score_blocks_closure_batch(blocks, index, qweights)
-    # per-(query, doc) score: fold the query's token SEQUENCE over the
-    # per-term partials — BM25Okapi's exact float addition order (shared
-    # tie-determinism contract with bm25.py::_fold_scores)
-    tok_map = F.create_map(*[
-        x for qi, q in enumerate(queries)
-        for x in (F.lit(qi),
-                  F.array(*[F.lit(t) for t in tokenize_k2_py(q)]))])
-    g = partials.groupBy("query_id", "doc_id").agg(
-        F.map_from_entries(F.collect_list(F.struct("term", "score")))
-        .alias("__pm"))
-    folded = F.aggregate(
-        F.element_at(tok_map, F.col("query_id")), F.lit(0.0),
-        lambda acc, t: acc + F.coalesce(F.element_at(F.col("__pm"), t),
-                                        F.lit(0.0)))
-    return g.select("query_id", "doc_id", folded.alias("_bm25_raw"))
-
-
-def bm25_scores_batch_served(spark: SparkSession, index: InvertedIndex,
-                             queries: list[str]) -> DataFrame:
-    """(query_id, doc_id, _bm25_raw) over the WARM doc-sharded serving
-    layout — value- and bit-identical to ``bm25_scores_batch`` but with
-    zero shuffle and zero joins: every document's complete postings live
-    in one serving shard (``InvertedIndex.warm``), so per-(query, doc)
-    scores finish inside one map stage; idf comes from the driver cache
-    (no term_stats join). Used by ``hybrid_search_batch`` automatically
-    when the index is warm. Bit-parity contract: per-term partials use
-    the same float expression as ``_score_blocks_closure`` and are
-    accumulated in QUERY TOKEN ORDER (``_fold_scores``' addition order),
-    so hybrid results are identical whichever path ran
+    """(query_id, doc_id, _bm25_raw) for every doc matching ≥1 query term:
+    the BM25 kernel in its all-scores mode (``bm25._scores``, k=None)
+    over the batch's terms' blocks. On a warm index that is one map stage
+    over the resident doc-sharded layout — no shuffle, no join — with
+    idf from the driver cache; on a cold index one idf lookup job for the
+    whole batch and the range_id repartition of the on-disk blocks; a
+    partial warm mixes the two. Scores add up in query token order, so
+    they equal the ranking paths' bit for bit whichever layout ran
     (tests/test_ops.py::test_hybrid_served_bm25_parity)."""
-    from ..functions.tokenize import tokenize_k2_py
-    idf = index.idf_lookup()
-    if idf is None:
-        # cold index: degrade to the (slower, shuffle+join) cold path
-        # rather than erroring — same values, same fold order, so the
-        # answer is identical either way (test_cold_fallback)
-        return bm25_scores_batch(spark, index, queries)
     token_seqs = [tokenize_k2_py(q) for q in queries]
-    known = sorted({t for seq in token_seqs for t in seq if t in idf})
-    if not known:
+    idf = query_term_idf(spark, index,
+                         sorted({t for seq in token_seqs for t in seq}))
+    if not idf:
         return spark.createDataFrame(
             [], "query_id int, doc_id long, _bm25_raw double")
-    idf_q = {t: idf[t] for t in known}
-    k1, b = index.cfg.bm25.k1, index.cfg.bm25.b
-    avgdl = index.avgdl
+    return (_scores(spark, index, token_seqs, idf, with_query_id=True)
+            .withColumnRenamed("score", "_bm25_raw"))
 
-    def score_shard(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..index.codec import varint_decode
-        frames = [pdf for pdf in it if len(pdf)]
-        if not frames:
-            return
-        pdf = frames[0] if len(frames) == 1 \
-            else pd.concat(frames, ignore_index=True)
-        # bulk decode (one varint pass per column, per-block cumsum reset
-        # via base subtraction) — bitwise-identical per element to the
-        # per-block decode + score expression
-        ns = pdf["n"].to_numpy(dtype=np.int64)
-        total = int(ns.sum())
-        deltas = varint_decode(b"".join(pdf["doc_bytes"]),
-                               total).astype(np.int64)
-        starts = np.concatenate([[0], np.cumsum(ns)[:-1]])
-        c = np.cumsum(deltas)
-        base = np.zeros(len(ns), dtype=np.int64)
-        base[1:] = c[starts[1:] - 1]
-        d_all = c - np.repeat(base, ns)
-        tf = varint_decode(b"".join(pdf["tf_bytes"]),
-                           total).astype(np.float64)
-        ln = varint_decode(b"".join(pdf["dl_bytes"]),
-                           total).astype(np.float64)
-        denom = tf + k1 * (1 - b + b * ln / avgdl)
-        terms_col = pdf["term"].to_numpy()
-        w_row = np.array([idf_q[t] for t in terms_col])
-        s_all = np.repeat(w_row, ns) * (tf * (k1 + 1) / denom)
-        per_term: dict[str, list] = {}
-        for j, term in enumerate(terms_col):
-            a = starts[j]
-            e = a + ns[j]
-            per_term.setdefault(term, []).append((d_all[a:e], s_all[a:e]))
-        if not per_term:
-            return
-        # pre-concatenate each term's block slices once: a (term, doc)
-        # pair occurs in exactly one block, so one vectorized scatter-add
-        # per token is bitwise-equal to the per-block loop
-        per_term_cat = {
-            t: (np.concatenate([d for d, _ in parts]),
-                np.concatenate([s for _, s in parts]))
-            for t, parts in per_term.items()}
-        for qi, seq in enumerate(token_seqs):
-            qterms = {t for t in seq if t in per_term_cat}
-            if not qterms:
-                continue
-            uniq = np.unique(np.concatenate(
-                [per_term_cat[t][0] for t in qterms]))
-            totals = np.zeros(len(uniq))
-            # accumulate in QUERY TOKEN order (repeats included) — a doc a
-            # term doesn't match gets +0.0, bitwise equal to _fold_scores
-            for tok in seq:
-                got = per_term_cat.get(tok)
-                if got is not None:
-                    totals[np.searchsorted(uniq, got[0])] += got[1]
-            yield pd.DataFrame({"query_id": np.full(len(uniq), qi,
-                                                    dtype=np.int32),
-                                "doc_id": uniq,
-                                "_bm25_raw": totals})
 
-    blocks = index.serving_df(spark).filter(F.col("term").isin(known))
-    out = blocks.mapInPandas(
-        score_shard, schema="query_id int, doc_id long, _bm25_raw double")
-    wr = index.warm_ranges()
-    if wr is not None:
-        # partial warm (warm(ranges=...)): exact-score the cold ranges on
-        # disk and union — bit-identical to the fully-warm path (the cold
-        # fold uses the same float expression and query-token order)
-        from .bm25 import _cold_scores_batch
-        cold = _cold_scores_batch(spark, index, idf_q, token_seqs, wr) \
-            .withColumnRenamed("score", "_bm25_raw")
-        out = out.unionByName(cold)
-    return out
+# The warm and cold BM25 stages are one function; the older name stays
+# bound to it for its callers.
+bm25_scores_batch_served = bm25_scores_batch
 
 
 def hybrid_search_batch(spark: SparkSession, index: InvertedIndex,
@@ -395,12 +276,7 @@ def hybrid_search_batch(spark: SparkSession, index: InvertedIndex,
     else:
         dense = dense_topk_batch(spark, embeddings, queries, pool,
                                  query_encoder=query_encoder)
-    if index.is_warm():
-        # warm serving layout available → zero-shuffle BM25 stage with
-        # driver-cached idf (bit-identical results, lower latency)
-        bm25 = bm25_scores_batch_served(spark, index, queries)
-    else:
-        bm25 = bm25_scores_batch(spark, index, queries)
+    bm25 = bm25_scores_batch(spark, index, queries)
     if reviews_emb is not None:
         # the pool feeds two consumers (cand + the bestrev semi-join);
         # cache it so the embeddings scan underneath runs once. The cached

@@ -4,7 +4,9 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from review_recommender_spark.index.codec import (decode_block, encode_block,
+from review_recommender_spark.index.codec import (decode_block,
+                                                  decode_doc_ids_bulk,
+                                                  encode_block,
                                                   encode_blocks_bulk,
                                                   varint_decode,
                                                   varint_encode)
@@ -79,3 +81,22 @@ def test_bulk_encode_equals_per_block(doc_list, n_groups):
         d2, t2, l2 = decode_block(db[i], tb[i], lb[i], int(e - s))
         assert (d2 == docs[s:e]).all()
         assert (t2 == tfs[s:e]).all() and (l2 == dls[s:e]).all()
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(st.sets(st.integers(min_value=0, max_value=10**12),
+                        min_size=1, max_size=64),
+                min_size=0, max_size=12))
+def test_bulk_doc_id_decode_equals_per_block(blocks):
+    """decode_doc_ids_bulk over many concatenated blocks must equal the
+    doc ids of per-block decode_block, block by block."""
+    encoded = [encode_block(np.array(sorted(b), dtype=np.int64),
+                            np.ones(len(b), dtype=np.int64),
+                            np.ones(len(b), dtype=np.int64))
+               for b in blocks]
+    ns = np.array([len(b) for b in blocks], dtype=np.int64)
+    got = decode_doc_ids_bulk(ns, [db for db, _, _ in encoded])
+    want = [decode_block(db, tb, lb, n)[0]
+            for (db, tb, lb), n in zip(encoded, ns)]
+    assert got.dtype == np.int64
+    assert got.tolist() == (np.concatenate(want).tolist() if want else [])

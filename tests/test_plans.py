@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from review_recommender_spark.query.bm25 import (_query_blocks,
-                                                 bm25_topk_exact, weights_df)
+                                                 bm25_topk_exact)
 
 
 def _plan(df, mode="formatted") -> str:
@@ -44,12 +44,6 @@ def test_postings_scan_reads_no_dead_columns(spark, small_index):
     plan = _plan(df)
     m = re.search(r"ReadSchema: ([^\n]*)", plan)
     assert m and "doc_bytes" not in m.group(1), plan
-
-
-def test_weights_join_is_broadcast(spark, small_index):
-    plan = _plan(weights_df(spark, small_index,
-                            ["wireless sound", "yellow cat"]))
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoop" in plan, plan
 
 
 def test_topk_is_take_ordered(spark, small_index):
@@ -301,3 +295,68 @@ def test_driver_built_result_collects_without_jobs(spark):
         _topk_result(spark, pairs, 3).collect())) == 0
     assert [(r["doc_id"], r["score"]) for r in out] \
         == [(3, 2.5), (7, 0.1 + 0.2), (9, 0.1 + 0.2)]
+
+
+def test_warm_served_query_job_budget(spark, small_index):
+    """A served query on a warm index: one map stage over the resident
+    layout plus the top-k merge, idf from the driver cache — 1 job."""
+    from review_recommender_spark.query.bm25 import bm25_topk_served
+
+    spark.catalog.clearCache()
+    idx = _cold(small_index)
+    idx.warm(spark)
+    try:
+        assert _jobs(spark, lambda: bm25_topk_served(
+            spark, idx, "wireless sound quality", k=10).collect()) == 1
+    finally:
+        idx.unwarm()
+        spark.catalog.clearCache()
+
+
+def test_cold_exact_query_job_budget(spark, small_index):
+    """A cold exact query: the idf lookup, the map stage that shuffles the
+    encoded blocks by range_id, and the kernel + top-k stage."""
+    assert _jobs(spark, lambda: bm25_topk_exact(
+        spark, _cold(small_index), "wireless sound quality",
+        k=10).collect()) == 3
+
+
+def test_cold_exact_plan_shuffles_encoded_blocks_once(spark, small_index):
+    """Below the top-k the unconstrained cold exact plan has one exchange,
+    the range_id repartition of the encoded blocks, and no aggregate or
+    join: per-doc scores finish inside the kernel."""
+    spark.catalog.clearCache()
+    plan = _plan(bm25_topk_exact(spark, _cold(small_index),
+                                 "wireless sound quality", k=10), "simple")
+    below = plan.split("TakeOrderedAndProject", 1)[1]
+    exchanges = re.findall(r"Exchange [^\n]*", below)
+    assert len(exchanges) == 1, plan
+    assert "hashpartitioning(range_id" in exchanges[0], plan
+    assert "HashAggregate" not in below and "Join" not in below, plan
+
+
+def test_k_zero_answers_without_jobs(spark, small_index):
+    """k == 0 returns an empty result before any job on every top-k entry
+    point (served with its default block skipping and the batch form
+    included); a negative k is an error."""
+    from review_recommender_spark.query.bm25 import (bm25_topk_pruned,
+                                                     bm25_topk_served,
+                                                     bm25_topk_served_batch)
+
+    cold = _cold(small_index)
+    q = "wireless sound quality"
+    calls = {
+        "exact": lambda k: bm25_topk_exact(spark, cold, q, k=k),
+        "served": lambda k: bm25_topk_served(spark, cold, q, k=k),
+        "served_batch": lambda k: bm25_topk_served_batch(
+            spark, cold, [q, "yellow cat"], k=k),
+        "pruned": lambda k: bm25_topk_pruned(spark, cold, q, k=k,
+                                             min_ranges_to_prune=1),
+    }
+    for name, call in calls.items():
+        rows: list = []
+        assert _jobs(spark, lambda: rows.extend(call(0).collect())) == 0, \
+            name
+        assert rows == [], name
+        with pytest.raises(ValueError):
+            call(-1)

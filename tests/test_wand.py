@@ -19,7 +19,7 @@ QUERIES = [
 
 
 @pytest.mark.parametrize("query", QUERIES)
-@pytest.mark.parametrize("k", [1, 10, 50])
+@pytest.mark.parametrize("k", [0, 1, 10, 50])
 def test_pruned_equals_exact(spark, small_index, query, k):
     exact = bm25_topk_exact(spark, small_index, query, k=k).collect()
     pruned = bm25_topk_pruned(spark, small_index, query, k=k,
